@@ -736,9 +736,10 @@ def selection_diversity(
     selection measured 327 s fold vs 11.1 s Arrow; a catalog fixture
     whose selection GREW with the corpus walked into that cliff at the
     100x universe before auto-selection). ``use_arrow=True`` is the
-    scale backend (the ``arrow_verify`` / ``pandas_cosine_topk``
-    pattern): the k×dim selection matrix is closed over (k-sized by
-    contract — the same budget as broadcasting it) and each Arrow batch
+    scale backend (the ``embedding_near_dups`` verify /
+    ``pandas_cosine_topk`` pattern): the k×dim selection matrix is
+    closed over (k-sized by contract — the same budget as broadcasting
+    it) and each Arrow batch
     computes its rows' cosines against ALL of it in one BLAS
     ``A @ Q.T`` — measured 253 s → 11.1 s
     at a 12k-vector selection (the interpreted per-element fold is the

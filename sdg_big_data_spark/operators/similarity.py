@@ -11,9 +11,12 @@ Two paths:
   are an equi-join key, so candidate generation is a hash join, not a
   cross join.
 
-Dot products use ``F.zip_with`` + ``F.aggregate`` fold (JVM codegen over
-array columns — no Python). For very wide vectors or very hot loops, the
-``pandas_cosine_topk`` variant moves the math to a vectorized Arrow batch.
+Dot products have one summation order: the index-order left fold of
+:func:`dot` (``F.zip_with`` + ``F.aggregate``), which the DuckDB oracle
+replays. The scoring paths evaluate it in vectorized Arrow UDFs whose
+numpy kernels (``functions/vec.py``) keep that order bit for bit; the
+expression forms stay as the reference the parity tests compare
+against. ``pandas_cosine_topk`` alone trades the order for BLAS.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..functions.vec import cross_dots, cross_sq_dists, dots, pair_dots, stack
 
 # Fixed deterministic hyperplane constants (mixed by index) so LSH buckets
 # are reproducible across runs/engines.
@@ -53,50 +58,21 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def _fold_dots(A, B):
-    """(dot(a,b), dot(a,a), dot(b,b)) per row, accumulated PER DIMENSION
-    IN INDEX ORDER — bit-identical to the interpreted
-    ``zip_with``/``aggregate`` left fold of :func:`dot` (same discipline
-    as ``clustering._pairwise_sq_dists``; BLAS ``@``/``einsum`` are
-    disqualified — SIMD partial sums reorder the float accumulation)."""
-    import numpy as np
-
-    n = A.shape[0]
-    dab = np.zeros(n)
-    daa = np.zeros(n)
-    dbb = np.zeros(n)
-    for i in range(A.shape[1]):
-        x, y = A[:, i], B[:, i]
-        dab += x * y
-        daa += x * x
-        dbb += y * y
-    return dab, daa, dbb
-
-
-def _pairwise_arrow(out_of_pair):
+def _pairwise_arrow(kernel):
     """Build a (a, b) → double vectorized Arrow UDF from a function of
-    the three fold dots. Null on either side → null (as the expression
-    forms: zip_with/aggregate propagate null)."""
-    import numpy as np
+    the two stacked vector matrices. Null on either side → null (as the
+    expression forms: zip_with/aggregate propagate null); so is a NaN
+    result, which the Arrow serializer turns into null."""
 
     @F.pandas_udf("double")
     def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        av, bv = a.to_numpy(), b.to_numpy()
-        n = len(av)
-        out = np.full(n, np.nan)
-        mask = np.fromiter(
-            ((x is not None and y is not None) for x, y in zip(av, bv)),
-            bool,
-            n,
-        )
-        idx = np.flatnonzero(mask)
-        if len(idx):
-            A = np.vstack(av[idx]).astype(np.float64)
-            B = np.vstack(bv[idx]).astype(np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out[idx] = out_of_pair(*_fold_dots(A, B))
-        s = pd.Series(out)
-        return s.where(mask, None)
+        both = a.notna() & b.notna()
+        A, pos = stack(a.where(both))
+        B, _ = stack(b.where(both))
+        out = np.full(len(a), np.nan)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            out[pos] = kernel(A, B)
+        return pd.Series(out)
 
     return _udf
 
@@ -107,7 +83,7 @@ def dot_arrow(a: Column, b: Column) -> Column:
     folds PER PAIR; the numpy kernel computes the same per-dimension
     index-order sums batch-wide — bit-identical values (gate test:
     ``test_arrow_pair_scores_match_expression_forms``)."""
-    return _pairwise_arrow(lambda dab, daa, dbb: dab)(a, b)
+    return _pairwise_arrow(dots)(a, b)
 
 
 def cosine_arrow(a: Column, b: Column) -> Column:
@@ -115,9 +91,14 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     ``dot/(sqrt(dot_aa)·sqrt(dot_bb))``, each dot in fold order (norms
     recomputed per pair give the identical double as a per-row norm
     column: both are the same pure function of the row's vector).
-    0/0 stays NaN exactly as the JVM division produced it."""
+
+    Degenerate rows differ from :func:`cosine`: a zero-norm or NaN
+    vector makes the quotient NaN here, which comes back NULL; the
+    expression form raises ``DIVIDE_BY_ZERO`` on a zero norm under
+    Spark's ANSI default."""
     return _pairwise_arrow(
-        lambda dab, daa, dbb: dab / (np.sqrt(daa) * np.sqrt(dbb))
+        lambda A, B: dots(A, B)
+        / (np.sqrt(dots(A, A)) * np.sqrt(dots(B, B)))
     )(a, b)
 
 
@@ -261,26 +242,18 @@ def hyperplane_bucket(vec: Column, dim: int, n_planes: int = 8) -> Column:
 
     @F.pandas_udf("long")
     def _bucket(s: pd.Series) -> pd.Series:
-        vals = s.to_numpy()
-        n = len(vals)
-        out = np.zeros(n, dtype=np.int64)
-        mask = np.fromiter((v is not None for v in vals), bool, n)
-        idx = np.flatnonzero(mask)
-        if len(idx):
-            V = np.vstack(vals[idx]).astype(np.float64)
-            proj = np.zeros((V.shape[0], P.shape[0]))
-            for i in range(V.shape[1]):
-                proj += V[:, i, None] * P[None, :, i]
-            out[idx] = (proj > 0) @ weights
+        V, pos = stack(s)
+        out = np.zeros(len(s), dtype=np.int64)
+        out[pos] = (cross_dots(V, P) > 0) @ weights
         return pd.Series(out)
 
-    # asNondeterministic: an optimizer FENCE, not a semantics claim (the
-    # bucket is a pure function of the vector). Without it the
-    # isnotnull(join-key) filter the planner derives for the bucket
-    # equi-join is pushed BELOW the projection and the UDF is evaluated
-    # TWICE per side (guide §4.4 — observed as 5 ArrowEvalPython nodes
-    # in e_lsh_topk's plan, audit r11). Values are unchanged either way.
-    return _bucket.asNondeterministic()(vec)
+    # The UDF never returns null, but Spark types it nullable, so the
+    # planner derives isnotnull(bucket) for the bucket equi-join and
+    # pushes that filter below the projection — evaluating the UDF twice
+    # per side (5 ArrowEvalPython nodes in e_lsh_topk's plan instead of
+    # 3). coalesce with a literal makes the bucket non-nullable, so the
+    # derived isnotnull folds to true and the filter goes away.
+    return F.coalesce(_bucket(vec), F.lit(0).cast("long"))
 
 
 def lsh_topk(
@@ -300,19 +273,11 @@ def lsh_topk(
     """
     cb = corpus.withColumn("__bkt", hyperplane_bucket(F.col(vec_col), dim, n_planes))
     qb = queries.withColumn("__bkt", hyperplane_bucket(F.col(vec_col), dim, n_planes))
-    # Norms are per-row: compute BEFORE the pair join (1 dot per pair
-    # after, not 3 — same floats, cosine = dot/(na*nb) either way).
     q = qb.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(F.col(vec_col)).alias("__qn"),
-        "__bkt",
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), "__bkt"
     )
     c = cb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm(F.col(vec_col)).alias("__cn"),
-        "__bkt",
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), "__bkt"
     )
     scored = (
         c.join(F.broadcast(q), "__bkt")
@@ -320,7 +285,7 @@ def lsh_topk(
         .withColumn(
             "cos", cosine_arrow(F.col("__qv"), F.col("__cv"))
         )
-        .drop("__qv", "__cv", "__qn", "__cn", "__bkt")
+        .drop("__qv", "__cv", "__bkt")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
@@ -416,15 +381,13 @@ def ivf_topk(
     ).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv_vec"),
-        norm(F.col(vec_col)).alias("__cn"),
         "__cell",
     )
     probes = _nearest_cells(
         queries.select(id_col, vec_col), cent, id_col, vec_col, nprobe
     ).select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), "__cell")
-    q = probes.withColumn("__qn", norm(F.col("__qv")))
     scored = (
-        assign.join(F.broadcast(q), "__cell")
+        assign.join(F.broadcast(probes), "__cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "cos",
@@ -468,26 +431,20 @@ def embedding_near_dups(
     dim: int = 64,
     threshold: float = 0.95,
     n_planes: int | str = 6,
-    arrow_verify: bool = True,
     max_bucket_rows: int | None = 4096,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH buckets + exact
     cosine verify (pairs a < b with cos >= threshold).
 
-    Two verify strategies, same bucketing, same doubles:
+    Verify groups by bucket and ``applyInPandas`` computes the bucket's
+    pairwise cosines in numpy. Each vector crosses Arrow once (not once
+    per candidate pair, as a pair self-join materializes), and the
+    per-pair dot is vectorized across pairs while summing each pair in
+    index order (``functions/vec.py``) — the same left-to-right order as
+    the SQL fold, so results are bit-identical to the declarative form
+    (not just close).
 
-    - ``arrow_verify=True`` (default, the scale path): group by bucket,
-      ``applyInPandas`` computes the bucket's pairwise cosines in numpy.
-      Each vector crosses Arrow once (not once per candidate pair, as a
-      pair self-join materializes), and the per-pair dot is vectorized.
-      Summation runs via ``cumsum`` along the vector axis — the same
-      left-to-right order as the SQL fold, so results are bit-identical
-      to the declarative form (not just close).
-    - ``arrow_verify=False``: pure DataFrame self-join on bucket id +
-      per-pair fold. Zero Python dependency; the per-pair higher-order
-      fold is interpreted, so it loses at high pair counts.
-
-    **Hot-bucket salting** (``max_bucket_rows``, Arrow path): a bucket
+    **Hot-bucket salting** (``max_bucket_rows``): a bucket
     of n rows is n²/2 pairs in ONE task — a single hot bucket (near-dup
     clusters, zero vectors, spam floods) straggles or OOMs the stage no
     matter how many executors exist. Buckets larger than
@@ -510,9 +467,7 @@ def embedding_near_dups(
     b = df.withColumn(
         "__bkt", hyperplane_bucket(F.col(vec_col), dim, n_planes)
     ).select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"), "__bkt")
-    if arrow_verify:
-        return _bucket_pairs_arrow(b, threshold, max_bucket_rows)
-    return _bucket_pairs_join(b, threshold)
+    return _bucket_pairs_arrow(b, threshold, max_bucket_rows)
 
 
 def _bucket_pairs_arrow(
@@ -524,10 +479,7 @@ def _bucket_pairs_arrow(
     :func:`semantic_dedup` (buckets = cluster cells), including the
     hot-bucket salting decomposition documented on embedding_near_dups.
     Emits (id_a < id_b, cos) pairs with cos >= threshold, bit-identical
-    to the SQL fold (sequential-order cumsum)."""
-    import numpy as np
-    import pandas as pd
-
+    to the SQL fold (index-order kernels of ``functions/vec.py``)."""
     from ..session import ship_package
 
     ship_package(b.sparkSession)
@@ -537,49 +489,10 @@ def _bucket_pairs_arrow(
             {"id_a": "int64", "id_b": "int64", "cos": "float64"}
         )
 
-    def _seq_dot(A, B) -> "np.ndarray":
-        # Left-fold dot along axis 1 as an explicit accumulation loop —
-        # IDENTICAL summation order to cumsum(...)[:, -1] (and so to
-        # the SQL fold, bit-for-bit).
-        acc = A[:, 0] * B[:, 0]
-        for d in range(1, A.shape[1]):
-            acc = acc + A[:, d] * B[:, d]
-        return acc
-
-    def _pair_seq_dot(V_a, V_b, ia, ib) -> "np.ndarray":
-        # Same left fold over candidate PAIRS without ever materializing
-        # the pairs x dim gather: per dimension, gather one pairs-long
-        # column from the (task-local, cache-resident) vector matrices
-        # and accumulate. The cumsum/full-gather form allocated TWO
-        # pairs x dim double matrices per task (a 4096-row salted bucket
-        # is 8.4M pairs -> 4.3 GB each) — across 32 concurrent tasks
-        # that was allocation churn, not arithmetic; measured 632 s ->
-        # ~65 s on the 100x near-dup fixture for the same flops, same
-        # bits. r10: pairs now stream through 64k-chunk slices so the
-        # accumulator and per-dim gather outputs stay cache-resident
-        # (8.0 s -> 3.3 s on the same 8.4M-pair bucket, bit-identical —
-        # chunking only partitions the independent pair axis), and the
-        # vector matrices are column-major because the loop gathers
-        # columns.
-        A = np.asfortranarray(V_a)
-        B = A if V_b is V_a else np.asfortranarray(V_b)
-        n_pairs = len(ia)
-        out = np.empty(n_pairs)
-        for s in range(0, n_pairs, 65536):
-            e = min(s + 65536, n_pairs)
-            ja, jb = ia[s:e], ib[s:e]
-            acc = A[ja, 0] * B[jb, 0]
-            for d in range(1, A.shape[1]):
-                acc += A[ja, d] * B[jb, d]
-            out[s:e] = acc
-        return out
-
     def _pairs(ids_a, V_a, ids_b, V_b, ia, ib) -> "pd.DataFrame":
-        # Sequential-order sums keep bit-parity with the SQL/DuckDB form.
-        nrm_a = np.sqrt(_seq_dot(V_a, V_a))
-        nrm_b = np.sqrt(_seq_dot(V_b, V_b))
-        dots = _pair_seq_dot(V_a, V_b, ia, ib)
-        cos = dots / (nrm_a[ia] * nrm_b[ib])
+        nrm_a = np.sqrt(dots(V_a, V_a))
+        nrm_b = np.sqrt(dots(V_b, V_b))
+        cos = pair_dots(V_a, V_b, ia, ib) / (nrm_a[ia] * nrm_b[ib])
         keep = cos >= threshold
         lo = np.minimum(ids_a[ia[keep]], ids_b[ib[keep]])
         hi = np.maximum(ids_a[ia[keep]], ids_b[ib[keep]])
@@ -684,33 +597,6 @@ def _bucket_pairs_arrow(
     )
 
 
-def _bucket_pairs_join(b: DataFrame, threshold: float) -> DataFrame:
-    """Pure-DataFrame bucket self-join + per-pair interpreted fold verify
-    over (__id, __v, __bkt) — zero Python dependency; loses to the Arrow
-    path at high pair counts."""
-    x = b.select(
-        F.col("__id").alias("id_a"),
-        F.col("__v").alias("__va"),
-        norm(F.col("__v")).alias("__na"),
-        "__bkt",
-    )
-    y = b.select(
-        F.col("__id").alias("id_b"),
-        F.col("__v").alias("__vb"),
-        norm(F.col("__v")).alias("__nb"),
-        "__bkt",
-    )
-    return (
-        x.join(y, "__bkt")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos", cosine_arrow(F.col("__va"), F.col("__vb"))
-        )
-        .where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
 def quantize_embeddings(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -755,7 +641,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     cell_col: str = "cell",
     threshold: float = 0.95,
-    arrow_verify: bool = True,
     max_cell_rows: int | None = 4096,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -774,8 +659,8 @@ def semantic_dedup(
 
     Scale shape: candidate pairs come from the SAME per-bucket Arrow
     verify engine as :func:`embedding_near_dups` (buckets = cells,
-    vectors cross Arrow once, pairwise cosines vectorized in numpy with
-    sequential-order cumsum — bit-identical to the SQL fold), including
+    vectors cross Arrow once, pairwise cosines vectorized in numpy in
+    index order — bit-identical to the SQL fold), including
     its hot-cell salting decomposition (``max_cell_rows``); no corpus
     cross product anywhere. **The cell count is the scale knob**: work
     is Σ n_cell², so a FIXED k makes semantic dedup quadratic in corpus
@@ -785,8 +670,6 @@ def semantic_dedup(
     work ~n^1.5 when centroid training cost matters). Transitive-chain
     semantics (components instead of greedy balls) are available by
     feeding the pair list into graph.connected_components.
-    ``arrow_verify=False`` keeps the zero-Python bucket self-join +
-    interpreted fold.
 
     The (id, cell, vector) input projection is MATERIALIZED once
     (tracked ``localCheckpoint``): it feeds three consumers — pair
@@ -806,10 +689,7 @@ def semantic_dedup(
         )
     )
     keyed = base.select("__id", "__v", F.col("__cell").alias("__bkt"))
-    if arrow_verify:
-        pairs = _bucket_pairs_arrow(keyed, threshold, max_cell_rows)
-    else:
-        pairs = _bucket_pairs_join(keyed, threshold)
+    pairs = _bucket_pairs_arrow(keyed, threshold, max_cell_rows)
     # pairs emit id_a < id_b with cos >= threshold, so "has a smaller-id
     # near neighbor in my cell" is exactly "appears as id_b"
     dropped = (
@@ -938,8 +818,8 @@ def pq_encode(
     `clustering.assign_clusters` after its r10 vectorization), so
     encoding is one narrow ``ArrowEvalPython`` projection over ONLY the
     vector column — no shuffle, no join. Distances accumulate per
-    dimension in index order (:func:`~.clustering._pairwise_sq_dists` on
-    each subspace slice), bit-identical to the interpreted
+    dimension in index order (``vec.cross_sq_dists`` on each subspace
+    slice), bit-identical to the interpreted
     ``zip_with``/``aggregate`` left fold this replaces (r11 — the fold
     ran m × cells interpreted aggregates of ``dim/m`` steps per row and
     was the dominant term of e_pq_encode/e_pq_topk at sf0.1), and
@@ -950,10 +830,6 @@ def pq_encode(
     exactly as the expression form did (each sub-code evaluated null).
     Equality with the expression form is pinned by
     ``tests/test_r11_optimizations.py::test_pq_encode_matches_expression_form``."""
-    import numpy as np
-
-    from .clustering import _pairwise_sq_dists
-
     sub = len(codebooks[0][0][1])
     m = len(codebooks)
     cell_ids = [np.array([int(c) for c, _ in cb]) for cb in codebooks]
@@ -964,28 +840,15 @@ def pq_encode(
     @F.pandas_udf("array<int>")
     def _encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for s in batches:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            vals = s.to_numpy()
-            null_mask = np.fromiter(
-                (v is None for v in vals), dtype=bool, count=len(vals)
-            )
-            out = np.empty(len(vals), dtype=object)
-            if null_mask.any():
-                for i in np.flatnonzero(null_mask):
-                    out[i] = [None] * m
-            good = ~null_mask
-            if good.any():
-                V = np.vstack(vals[good]).astype(np.float64)
-                codes = np.empty((V.shape[0], m), dtype=np.int64)
-                for j in range(m):
-                    D = _pairwise_sq_dists(V[:, j * sub : (j + 1) * sub], cents[j])
-                    codes[:, j] = cell_ids[j][np.argmin(D, axis=1)]
-                rows = codes.tolist()
-                for i, gi in enumerate(np.flatnonzero(good)):
-                    out[gi] = rows[i]
-            yield pd.Series(out)
+            V, pos = stack(s)
+            codes = np.empty((len(pos), m), dtype=np.int64)
+            for j in range(m):
+                D = cross_sq_dists(V[:, j * sub : (j + 1) * sub], cents[j])
+                codes[:, j] = cell_ids[j][np.argmin(D, axis=1)]
+            out = [[None] * m] * len(s)  # a null vector: m null sub-codes
+            for i, row in zip(pos.tolist(), codes.tolist()):
+                out[i] = row
+            yield pd.Series(out, dtype=object)
 
     return df.withColumn(code_col, _encode(F.col(vec_col)))
 

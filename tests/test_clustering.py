@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -90,3 +92,40 @@ def test_kmeans_assignment_is_map_only(planted):
     for bad in ("Exchange", "Join", "BatchEvalPython"):
         assert bad not in plan, f"assignment plan contains {bad}:\n{plan[:800]}"
     assert plan.count("ArrowEvalPython") == 1, plan[:800]
+
+
+def test_assign_clusters_matches_expression_fold(spark, sf_dir):
+    """Bit-parity gate for the numpy assignment: cluster ids equal the
+    interpreted ``zip_with``/``aggregate`` squared-distance fold's
+    first-minimum argmin (``array_position(d, array_min(d))``) on every
+    sf0.01 embedding, a duplicated centroid forces exact ties (lowest
+    cell wins), and a null vector keeps a null id."""
+    from pyspark.sql import functions as F
+
+    from sdg_big_data_spark.functions.text import let
+    from sdg_big_data_spark.operators.clustering import assign_clusters
+    from sdg_big_data_spark.operators.similarity import _sq_dist
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
+        "vec_id", "embedding"
+    )
+    seeds = emb.orderBy("vec_id").limit(6).collect()
+    cents = [[float(x) for x in r["embedding"]] for r in seeds]
+    cents.insert(3, cents[1])  # cells 1 and 3 tie for every vector
+    null_row = spark.createDataFrame(
+        [(-1, None)], schema="vec_id long, embedding array<float>"
+    )
+    df = emb.unionByName(null_row)
+
+    dists = F.array(*[_sq_dist(F.col("embedding"), F.lit(c)) for c in cents])
+    ref = let(dists, lambda d: F.array_position(d, F.array_min(d)) - 1)
+    both = assign_clusters(df, cents).select(
+        "vec_id", "cluster_id", ref.cast("int").alias("ref_id")
+    )
+    rows = both.collect()
+    assert len(rows) == emb.count() + 1
+    bad = [r for r in rows if r["cluster_id"] != r["ref_id"]]
+    assert not bad, bad[:5]
+    assert {r["vec_id"]: r["cluster_id"] for r in rows}[-1] is None
+    ids = {r["cluster_id"] for r in rows}
+    assert 1 in ids and 3 not in ids  # every 1-vs-3 tie went to cell 1

@@ -49,6 +49,41 @@ def test_pandas_topk_across_batches(spark, emb):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
 
 
+def test_cosine_arrow_degenerate_rows_are_null(spark):
+    """Pins the Arrow scorer's current edge behaviour: a zero-norm or
+    NaN-component vector gives a NaN quotient, which comes back NULL (the
+    expression form instead raises DIVIDE_BY_ZERO on a zero norm under
+    ANSI); a null vector gives NULL; a sound pair still scores."""
+    from sdg_big_data_spark.operators.similarity import cosine_arrow, dot_arrow
+
+    nan = float("nan")
+    rows = [
+        (0, [1.0, 0.0], [0.0, 0.0]),  # zero norm on one side
+        (1, [0.0, 0.0], [0.0, 0.0]),  # 0/0
+        (2, [nan, 1.0], [1.0, 1.0]),  # NaN component
+        (3, None, [1.0, 1.0]),  # null vector
+        (4, [3.0, 4.0], [3.0, 4.0]),  # sound pair
+    ]
+    df = spark.createDataFrame(
+        rows, schema="id long, a array<float>, b array<float>"
+    )
+    got = {
+        r["id"]: (r["cos"], r["dot"])
+        for r in df.select(
+            "id",
+            cosine_arrow(F.col("a"), F.col("b")).alias("cos"),
+            dot_arrow(F.col("a"), F.col("b")).alias("dot"),
+        ).collect()
+    }
+    assert got == {
+        0: (None, 0.0),
+        1: (None, 0.0),
+        2: (None, None),
+        3: (None, None),
+        4: (1.0, 25.0),
+    }
+
+
 # --- hot-bucket salting (VERDICT r2 #5) --------------------------------------
 
 
