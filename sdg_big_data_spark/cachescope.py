@@ -47,9 +47,54 @@ def register_checkpoint_ids(spark, ids) -> None:
         _LIVE_CKPT.append((spark, frozenset(ids)))
 
 
+def _persistent_ids(spark) -> set[int]:
+    """Ids of every RDD the session holds persisted (cache and
+    localCheckpoint blocks alike)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@contextmanager
+def new_persistent_ids(spark):
+    """Yield a set that, once the ``with`` body has run, holds the ids
+    of the RDDs it persisted — how a lazy
+    ``localCheckpoint(eager=False)`` learns its block ids from the
+    action that materializes it."""
+    ids: set[int] = set()
+    before = _persistent_ids(spark)
+    yield ids
+    ids.update(_persistent_ids(spark) - before)
+
+
+def unpersist_ids(spark, ids) -> None:
+    """Unpersist the persistent RDDs with these ids; ids already gone
+    (or a stopped session) are skipped. ``clearCache()``/``unpersist()``
+    do NOT release checkpointed RDDs — this is the only way to."""
+    try:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        for i in ids:
+            rdd = jmap.get(i)
+            if rdd is not None:
+                rdd.unpersist()
+    except Exception:
+        pass  # session already stopped — nothing to release
+
+
+def checkpoint_with_ids(df: DataFrame) -> tuple[DataFrame, set[int]]:
+    """Eager ``localCheckpoint`` + the ids of the persistent RDDs it
+    created, NOT registered: iterative operators
+    (:mod:`.operators.graph`) :func:`unpersist_ids` superseded iteration
+    state themselves and register only what outlives them. Without
+    that, every iteration's checkpoint blocks stay in storage memory
+    for the session's lifetime — measured as a 2x whole-suite slowdown
+    once a few iterative queries had run."""
+    with new_persistent_ids(df.sparkSession) as ids:
+        out = df.localCheckpoint()
+    return out, ids
+
+
 def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` + register the persistent-RDD ids it
-    created for release by :func:`release_caches`/:func:`cache_scope`.
+    """Eager ``localCheckpoint`` registered for release by
+    :func:`release_caches`/:func:`cache_scope`.
 
     Use where a narrow intermediate feeds MANY downstream branches and
     the goal is truncating the LOGICAL plan (a cache only dedups
@@ -58,11 +103,8 @@ def tracked_local_checkpoint(df: DataFrame) -> DataFrame:
     cache, dropping a checkpoint does NOT fall back to recompute — the
     blocks must outlive every consumer, which the registry guarantees
     for the within-action lifetime operators need."""
-    spark = df.sparkSession
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint()
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    register_checkpoint_ids(spark, after - before)
+    out, ids = checkpoint_with_ids(df)
+    register_checkpoint_ids(df.sparkSession, ids)
     return out
 
 
@@ -101,10 +143,8 @@ def pin_session_cache(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     app_id = spark.sparkContext.applicationId
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    out.count()
-    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    new = after - before
+    with new_persistent_ids(spark) as new:
+        out.count()
     if not new:
         warnings.warn(
             "pin_session_cache recorded zero new storage RDDs — the plan "
@@ -148,29 +188,25 @@ def live_cache_count() -> int:
     return len(_LIVE)
 
 
-def release_caches(blocking: bool = False) -> int:
-    """Unpersist every registered cache + checkpoint; returns how many
-    were dropped."""
+def _release_to(mark: int, ckpt_mark: int, blocking: bool) -> int:
     n = 0
-    while _LIVE:
+    while len(_LIVE) > mark:
         df = _LIVE.pop()
         try:
             df.unpersist(blocking)
         except Exception:
             pass  # session already stopped — nothing to release
         n += 1
-    while _LIVE_CKPT:
-        spark, ids = _LIVE_CKPT.pop()
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for i in ids:
-                rdd = jmap.get(i)
-                if rdd is not None:
-                    rdd.unpersist()
-        except Exception:
-            pass
+    while len(_LIVE_CKPT) > ckpt_mark:
+        unpersist_ids(*_LIVE_CKPT.pop())
         n += 1
     return n
+
+
+def release_caches(blocking: bool = False) -> int:
+    """Unpersist every registered cache + checkpoint; returns how many
+    were dropped."""
+    return _release_to(0, 0, blocking)
 
 
 @contextmanager
@@ -179,24 +215,8 @@ def cache_scope(blocking: bool = False):
     mark/rollback semantics, so nested scopes and pre-existing caches
     compose correctly. Wrap any entry point that materializes operator
     results (pipelines, benchmarks, report builders)."""
-    mark = len(_LIVE)
-    ckpt_mark = len(_LIVE_CKPT)
+    mark, ckpt_mark = len(_LIVE), len(_LIVE_CKPT)
     try:
         yield
     finally:
-        while len(_LIVE) > mark:
-            df = _LIVE.pop()
-            try:
-                df.unpersist(blocking)
-            except Exception:
-                pass
-        while len(_LIVE_CKPT) > ckpt_mark:
-            spark, ids = _LIVE_CKPT.pop()
-            try:
-                jmap = spark.sparkContext._jsc.getPersistentRDDs()
-                for i in ids:
-                    rdd = jmap.get(i)
-                    if rdd is not None:
-                        rdd.unpersist()
-            except Exception:
-                pass
+        _release_to(mark, ckpt_mark, blocking)

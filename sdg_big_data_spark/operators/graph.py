@@ -23,33 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cachescope import scoped_cache
-
-
-def _persistent_ids(spark) -> set[int]:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-
-def _tracked_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """``localCheckpoint`` + the ids of the persistent RDDs it created,
-    so superseded iteration state can be UNPERSISTED. Without this,
-    every iteration's checkpoint blocks stay in storage memory for the
-    session's lifetime (``spark.catalog.clearCache`` does not touch
-    checkpointed RDDs) — measured as a 2x whole-suite slowdown once a
-    few iterative queries had run."""
-    spark = df.sparkSession
-    before = _persistent_ids(spark)
-    out = df.localCheckpoint()
-    return out, _persistent_ids(spark) - before
-
-
-def _unpersist_ids(spark, ids: set[int]) -> None:
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        rdd = jmap.get(i)
-        if rdd is not None:
-            rdd.unpersist()
-
+from ..cachescope import (
+    checkpoint_with_ids,
+    new_persistent_ids,
+    register_checkpoint_ids,
+    scoped_cache,
+    unpersist_ids,
+)
 
 
 def connected_components(
@@ -85,9 +65,9 @@ def connected_components(
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    sym, sym_ids = _tracked_checkpoint(sym.distinct())
+    sym, sym_ids = checkpoint_with_ids(sym.distinct())
 
-    labels, label_ids = _tracked_checkpoint(
+    labels, label_ids = checkpoint_with_ids(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
@@ -109,31 +89,28 @@ def connected_components(
         # count's scan over fresh checkpoint blocks is what forces the
         # materialization; ids are collected after it so unpersist
         # tracking still sees the blocks)
-        before = _persistent_ids(spark)
-        new_labels = (
-            proposals.unionByName(own)
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.max(F.when(F.col("__own") == 1, F.col("component"))).alias(
-                    "__old"
-                ),
+        with new_persistent_ids(spark) as new_ids:
+            new_labels = (
+                proposals.unionByName(own)
+                .groupBy("node")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.max(F.when(F.col("__own") == 1, F.col("component"))).alias(
+                        "__old"
+                    ),
+                )
+                .localCheckpoint(eager=False)
             )
-            .localCheckpoint(eager=False)
-        )
-        # min-label propagation only ever lowers labels, so "changed" is
-        # exactly "new < old"
-        changed = new_labels.where(F.col("component") < F.col("__old")).count()
-        new_ids = _persistent_ids(spark) - before
-        _unpersist_ids(spark, label_ids)  # superseded iteration state
+            # min-label propagation only ever lowers labels, so "changed" is
+            # exactly "new < old"
+            changed = new_labels.where(F.col("component") < F.col("__old")).count()
+        unpersist_ids(spark, label_ids)  # superseded iteration state
         labels, label_ids = new_labels.drop("__old"), new_ids
         if changed == 0:
             break
-    _unpersist_ids(spark, sym_ids)
+    unpersist_ids(spark, sym_ids)
     # the final labels checkpoint must outlive this function (the caller
     # consumes it); register so release_caches()/cache_scope sweeps it
-    from ..cachescope import register_checkpoint_ids
-
     register_checkpoint_ids(spark, label_ids)
     return labels
 
@@ -244,10 +221,10 @@ def pagerank(
     # node-sized rank frame each iteration instead, which is strictly
     # cheaper at scale: |nodes| << |edges| work per iteration vs a 1.5x
     # copy of the biggest frame in the job)
-    ec, ec_ids = _tracked_checkpoint(e)
+    ec, ec_ids = checkpoint_with_ids(e)
     # |nodes|-sized static degree frame, derived from the checkpoint
     # blocks (map-side-combined aggregate — one narrow shuffle)
-    deg, deg_ids = _tracked_checkpoint(
+    deg, deg_ids = checkpoint_with_ids(
         ec.groupBy("src").agg(F.count(F.lit(1)).alias("__od"))
     )
     if assume_no_dangling:
@@ -259,14 +236,14 @@ def pagerank(
         dang, dang_ids = None, set()
         has_dangling = False
     else:
-        nodes, node_ids = _tracked_checkpoint(
+        nodes, node_ids = checkpoint_with_ids(
             ec.select(F.col("src").alias("node"))
             .unionByName(ec.select(F.col("dst").alias("node")))
             .distinct()
         )
         n_nodes = nodes.count()
         # the dangling-node SET is static; only its mass changes per round
-        dang, dang_ids = _tracked_checkpoint(
+        dang, dang_ids = checkpoint_with_ids(
             nodes.join(
                 deg.select("src"),
                 nodes["node"] == F.col("src"),
@@ -310,8 +287,8 @@ def pagerank(
             # lazy, each iteration would DOUBLE the un-materialized
             # subtree (2^n recompute, ADVICE r4), so materialize before
             # the first of the two consumers regardless of the cadence
-            new_ranks, new_ids = _tracked_checkpoint(ranks)
-            _unpersist_ids(spark, rank_ids)
+            new_ranks, new_ids = checkpoint_with_ids(ranks)
+            unpersist_ids(spark, rank_ids)
             ranks, rank_ids = new_ranks, new_ids
             rank_is_lazy = False
         if has_dangling:
@@ -368,8 +345,8 @@ def pagerank(
                 )
             )
         if (_i + 1) % checkpoint_every == 0 and _i + 1 < n_iter:
-            new_ranks, new_ids = _tracked_checkpoint(stepped)
-            _unpersist_ids(spark, rank_ids)  # superseded iteration state
+            new_ranks, new_ids = checkpoint_with_ids(stepped)
+            unpersist_ids(spark, rank_ids)  # superseded iteration state
             ranks, rank_ids = new_ranks, new_ids
             rank_is_lazy = False
         else:
@@ -381,8 +358,6 @@ def pagerank(
             # top of the next iteration.
             ranks = stepped
             rank_is_lazy = True
-    from ..cachescope import register_checkpoint_ids
-
     # the final frame is lazy (the last iteration never checkpoints) —
     # its plan still reads the edge/degree/nodes (and possibly a mid-loop
     # rank) checkpoint blocks; keep them alive for the consuming action,
@@ -532,10 +507,10 @@ def bfs_hops(
     no tie-breaking is involved.
     """
     spark = edges.sparkSession
-    e, e_ids = _tracked_checkpoint(
+    e, e_ids = checkpoint_with_ids(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
-    frontier, f_ids = _tracked_checkpoint(
+    frontier, f_ids = checkpoint_with_ids(
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
         .withColumn("hop", F.lit(0))
@@ -561,19 +536,18 @@ def bfs_hops(
             if n_visited <= broadcast_frontier_max
             else (lambda df: df)
         )
-        before = _persistent_ids(spark)
-        nxt = (
-            e.join(hint_f(frontier.withColumnRenamed("node", "src")), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(hint_v(visited), "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=False)
-        )
-        n_frontier = nxt.count()
-        new_ids = _persistent_ids(spark) - before
+        with new_persistent_ids(spark) as new_ids:
+            nxt = (
+                e.join(hint_f(frontier.withColumnRenamed("node", "src")), "src")
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(hint_v(visited), "node", "left_anti")
+                .withColumn("hop", F.lit(h))
+                .localCheckpoint(eager=False)
+            )
+            n_frontier = nxt.count()
         if n_frontier == 0:
-            _unpersist_ids(spark, new_ids)
+            unpersist_ids(spark, new_ids)
             break
         levels.append(nxt)
         level_ids.append(new_ids)
@@ -584,9 +558,7 @@ def bfs_hops(
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
-    _unpersist_ids(spark, e_ids)
-    from ..cachescope import register_checkpoint_ids
-
+    unpersist_ids(spark, e_ids)
     for ids in level_ids:
         register_checkpoint_ids(spark, ids)
     return out
@@ -724,10 +696,8 @@ def k_core(
     sym = e0.select("u", "v").unionByName(
         e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    cur, cur_ids = _tracked_checkpoint(sym)
+    cur, cur_ids = checkpoint_with_ids(sym)
     n_cur = cur.count()
-    from ..cachescope import scoped_cache
-
     for _ in range(max_iter):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("__d"))
         # both semi-joins consume keep — cache it so the degree
@@ -739,17 +709,16 @@ def k_core(
         # count would re-aggregate degrees once more per round
         hint = F.broadcast if n_cur <= broadcast_nodes_max else (lambda d: d)
         keep_b = hint(keep)
-        before = _persistent_ids(spark)
-        nxt = (
-            cur.join(keep_b, "u", "left_semi")
-            .join(
-                keep_b.withColumnRenamed("u", "v"), "v", "left_semi"
+        with new_persistent_ids(spark) as new_ids:
+            nxt = (
+                cur.join(keep_b, "u", "left_semi")
+                .join(
+                    keep_b.withColumnRenamed("u", "v"), "v", "left_semi"
+                )
+                .localCheckpoint(eager=False)
             )
-            .localCheckpoint(eager=False)
-        )
-        n_next = nxt.count()  # materializes the lazy checkpoint
-        new_ids = _persistent_ids(spark) - before
-        _unpersist_ids(spark, cur_ids)
+            n_next = nxt.count()  # materializes the lazy checkpoint
+        unpersist_ids(spark, cur_ids)
         cur, cur_ids = nxt, new_ids
         converged = n_next == n_cur
         n_cur = n_next
@@ -758,7 +727,5 @@ def k_core(
     out = cur.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree")).select(
         F.col("u").alias("node"), "core_degree"
     )
-    from ..cachescope import register_checkpoint_ids
-
     register_checkpoint_ids(spark, cur_ids)
     return out

@@ -767,17 +767,14 @@ def psi_reference_model(
     leaking one un-released rank checkpoint + cache registration per
     batch on a continuous stream).
 
-    Every cache and rank-checkpoint this pass creates is released
-    before returning (``cache_scope`` + explicit persistent-RDD-id
-    registration for :func:`~.windows.global_rank`'s lazy layout pin,
-    which no registry tracked before)."""
-    from ..cachescope import cache_scope, register_checkpoint_ids, scoped_cache
+    Every cache this pass creates — including
+    :func:`~.windows.global_rank`'s layout pin, a registered
+    ``scoped_cache`` — is released by the ``cache_scope`` before
+    returning."""
+    from ..cachescope import cache_scope, scoped_cache
     from .windows import global_rank
 
-    spark = ref.sparkSession
-    jsc = spark.sparkContext._jsc
     with cache_scope():
-        before = set(jsc.getPersistentRDDs().keySet().toArray())
         v_ref = scoped_cache(
             ref.select(F.col(value_col).cast("double").alias("__v")).where(
                 F.col("__v").isNotNull()
@@ -801,11 +798,6 @@ def psi_reference_model(
             .groupBy("bin")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .collect()
-        )
-        # global_rank's lazy localCheckpoint (layout pin) is invisible to
-        # the cache registry; sweep it into this scope by RDD-id delta
-        register_checkpoint_ids(
-            spark, set(jsc.getPersistentRDDs().keySet().toArray()) - before
         )
     return edge_vals, ref_hist
 

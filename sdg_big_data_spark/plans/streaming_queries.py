@@ -54,7 +54,7 @@ from .text_queries import _sql_list, _SQL_TOKS
     b AS (
       SELECT user_id, ts, value,
              CASE WHEN epoch(ts) - lag(epoch(ts)) OVER
-                       (PARTITION BY user_id ORDER BY ts) >= 3600
+                       (PARTITION BY user_id ORDER BY ts) > 3600
                   THEN 1 ELSE 0 END AS brk
       FROM g
     ),
@@ -79,8 +79,9 @@ from .text_queries import _sql_list, _SQL_TOKS
     "seconds, so the sub-second fixture timestamps would otherwise "
     "split sessions differently between engines. Oracle: lag-gap "
     "segmentation + running-sum session ids, sess_end = last event + "
-    "gap ([start, end) window: a gap of exactly 1h starts a new "
-    "session in both forms)",
+    "gap. A gap of exactly 1h keeps one session in both forms: "
+    "session_window merges sessions whose [start, end) windows touch, "
+    "and the oracle breaks on gap > 3600 s, as g_sessionize does)",
 )
 def s_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windowed import session_aggregate

@@ -104,7 +104,8 @@ def small_input_lift(spark: SparkSession, df: DataFrame, path: str) -> DataFrame
     return df.repartition(int(n))
 
 
-# Resolved-plan memo: (applicationId, sf_dir, name, file-signature) →
+# Resolved-plan memo: (applicationId, id(session), sf_dir, name,
+# file-signature) →
 # DataFrame. A DataFrame is a LAZY logical plan — every action on it
 # still scans the parquet files — but *building* one costs 70-120 ms of
 # driver-side work (file listing, footer read, schema analysis round
@@ -115,7 +116,8 @@ def small_input_lift(spark: SparkSession, df: DataFrame, path: str) -> DataFrame
 # §6); no row data is cached. The signature (per-file size+mtime) keeps
 # mutated inputs correct: any rewrite of the table directory (the
 # incremental-append fixtures) re-resolves from disk. Entries from
-# stopped sessions are pruned by applicationId mismatch.
+# stopped sessions are pruned by applicationId mismatch, and a table's
+# superseded signatures when its new one is stored.
 _PLAN_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -192,9 +194,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in _LIFT_TABLES:
         df = small_input_lift(spark, df, path)
     if app_id is not None:
-        # prune entries from other (stopped) applications so the memo
-        # can't grow across session restarts in one process
-        for k in [k for k in _PLAN_MEMO if k[0] != app_id]:
+        # prune entries from other (stopped) applications, and this
+        # table's superseded file signatures (a rewritten table, e.g. an
+        # append batch), so the memo holds one plan per live table
+        for k in [k for k in _PLAN_MEMO if k[0] != app_id or k[:4] == key[:4]]:
             del _PLAN_MEMO[k]
         _PLAN_MEMO[key] = df
     return df

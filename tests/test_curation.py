@@ -1234,3 +1234,49 @@ class TestConstraintSuite:
             ).collect()
         }
         assert out == {"min(v)>=0": 0, "max(v)<=10": 0}
+
+
+def _reference_ngrams(t, n):
+    """The positional ``transform(sequence, concat_ws(slice))`` form of
+    word n-grams, kept as the reference for the one-regex ``ngrams``."""
+    from sdg_big_data_spark.functions.text import let
+
+    def body(tc):
+        k = F.size(tc) - (n - 1)
+        return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
+            F.transform(
+                F.sequence(F.lit(0), k - 1),
+                lambda i: F.concat_ws(" ", F.slice(tc, i + 1, n)),
+            )
+        )
+
+    return let(t, body)
+
+
+def test_ngrams_regex_matches_positional_reference(spark):
+    """``ngrams`` is ONE compiled-regex pass over the space-joined token
+    string; it must stay element-for-element identical to the
+    positional reference, including order, multiplicity, sub-n inputs,
+    empties and nulls."""
+    from sdg_big_data_spark.functions import text as T
+
+    texts = [
+        (0, "the quick brown fox jumps over the lazy dog"),
+        (1, "one two"),  # fewer than n=3 tokens
+        (2, "single"),
+        (3, ""),  # empty -> empty token array
+        (4, None),  # null text -> null tokens -> null grams
+        (5, "it's a dog's life it's fine"),  # apostrophe tokens
+        (6, "a a a a a"),  # repeated tokens (multiplicity must match)
+        (7, "num 42 mix3d t0kens 7"),
+        (8, "x " * 200),  # long doc
+        (9, "Á L'école!! http://x.io déjà-vu 9"),  # normalize first
+    ]
+    df = spark.createDataFrame(texts, schema="id long, text string")
+    toks = df.select("id", T.tokenize(F.col("text")).alias("t"))
+    for n in (2, 3, 5, 8):
+        got = toks.select("id", T.ngrams(F.col("t"), n).alias("g"))
+        ref = toks.select("id", _reference_ngrams(F.col("t"), n).alias("g"))
+        j = got.alias("a").join(ref.alias("b"), "id")
+        bad = j.where(~F.col("a.g").eqNullSafe(F.col("b.g"))).count()
+        assert bad == 0, f"ngrams(n={n}) diverged from positional form"

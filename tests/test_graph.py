@@ -372,3 +372,39 @@ class TestPageRankScalePlan:
         # correctness of the exact same frame (not just its plan)
         total = sum(r["rank"] for r in out.collect())
         assert abs(total - 1.0) < 1e-6
+
+
+def test_graph_degree_joins_broadcast_below_gate(spark):
+    """Below the edge-count gate, triangle_counts and
+    common_neighbor_similarity must plan ZERO SortMergeJoins — the
+    |nodes|-sized degree/is-edge frames broadcast, so the edge frame
+    (triangles) and the wedge-pair frame (common neighbors) are never
+    exchanged for them (cached frames carry no size stats, so without
+    the hint the planner exchanges and sorts the BIG side). Above the gate (threshold 0) the same code must
+    fall back to shuffle joins without error."""
+    from sdg_big_data_spark.operators.graph import (
+        common_neighbor_similarity,
+        triangle_counts,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, (i * 3 + 1) % 40) for i in range(120)] + [(i, i + 1) for i in range(40)],
+        schema="src long, dst long",
+    )
+
+    tri = triangle_counts(edges, "src", "dst")
+    plan = tri._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+    assert "BroadcastHashJoin" in plan
+
+    cn = common_neighbor_similarity(edges, src="src", dst="dst", top_k=5)
+    plan = cn._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+
+    # above-gate fallback stays correct (same rows, any join strategy)
+    small = {tuple(r) for r in tri.collect()}
+    big = {
+        tuple(r)
+        for r in triangle_counts(edges, "src", "dst", broadcast_edges_max=0).collect()
+    }
+    assert small == big

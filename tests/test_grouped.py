@@ -404,3 +404,44 @@ class TestHoltLinear:
         # on a clean ramp the trend converges to the slope
         assert last["trend"] == pytest.approx(2.0, abs=0.05)
         assert last["level"] == pytest.approx(118.0, abs=1.0)
+
+
+def test_grouped_prefix_sum_plans_no_python_eval(spark):
+    """``grouped_prefix_sum`` stays pure-JVM — its mapInPandas stage
+    was removed (no Python boundary where built-ins exist): no
+    ArrowEvalPython/MapInPandas/BatchEvalPython node anywhere in the
+    executed plan (pin disabled so the full subtree is visible)."""
+    from sdg_big_data_spark.operators.windows import grouped_prefix_sum
+
+    df = spark.createDataFrame(
+        [(i, "g%d" % (i % 3), i % 7) for i in range(500)],
+        schema="id long, g string, v int",
+    )
+    out = grouped_prefix_sum(
+        df, ["g"], [F.col("id").asc()], "v", cum_col="c", pin_layout=False
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
+        assert node not in plan, f"Python stage reintroduced: {node}"
+    # the scalable shape itself is still range-partitioned
+    assert "rangepartitioning" in plan.lower()
+
+
+def test_grouped_prefix_sum_multi_column_single_pass(spark):
+    """The multi-value form still carries both running sums in one pass
+    and matches independent single-column passes exactly."""
+    from sdg_big_data_spark.operators.windows import grouped_prefix_sum
+
+    df = spark.createDataFrame(
+        [(i, i % 2, i % 5, (i * 7) % 11) for i in range(400)],
+        schema="id long, g int, a int, b int",
+    )
+    both = grouped_prefix_sum(
+        df, ["g"], [F.col("id").asc()], ["a", "b"], cum_col=["ca", "cb"]
+    )
+    only_a = grouped_prefix_sum(df, ["g"], [F.col("id").asc()], "a", cum_col="ca")
+    only_b = grouped_prefix_sum(df, ["g"], [F.col("id").asc()], "b", cum_col="cb")
+    got = {(r["id"], r["ca"], r["cb"]) for r in both.collect()}
+    ref_a = {r["id"]: r["ca"] for r in only_a.collect()}
+    ref_b = {r["id"]: r["cb"] for r in only_b.collect()}
+    assert got == {(i, ref_a[i], ref_b[i]) for i in ref_a}

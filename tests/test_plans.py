@@ -820,3 +820,25 @@ def test_salted_join_left_outer_and_rejected_hows(spark):
     for bad in ("right", "full", "outer"):
         with _pytest.raises(ValueError, match="salted_join supports"):
             salted_join(big, small, "k", how=bad)
+
+
+def test_plan_shapes_match_record():
+    """Every catalog query's plan shape — physical node counts and
+    interpreted-lambda sites — matches the committed
+    ``PLAN_SHAPES.json``, and no query is a duplication suspect. The
+    walk runs in a fresh interpreter: a cold session, like the one that
+    wrote the record, so this suite's caches and memos cannot shift it.
+    After an intended shape change, re-run ``python
+    tools/plan_shapes.py`` and commit the record."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    proc = subprocess.run(
+        [sys.executable, "tools/plan_shapes.py", "--check"],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        timeout=1200,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr[-3000:]

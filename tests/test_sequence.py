@@ -113,3 +113,45 @@ class TestConversionLatency:
         assert got["mean_s"] == round(sum(d for d, _ in deltas) / n, 4)
         assert got["q50_s"] == deltas[max(1, math.ceil(0.5 * n)) - 1][0]
         assert got["q90_s"] == deltas[max(1, math.ceil(0.9 * n)) - 1][0]
+
+
+def test_funnel_matches_sequential_min_reference(spark):
+    """``funnel`` keeps per-step timestamp arrays + a conditional min
+    (no ordered history). Counts must equal the naive per-user
+    sequential scan (strictly-after semantics), incl. users who skip
+    steps / do them out of order / repeat them."""
+    import itertools
+
+    steps = ["view", "click", "purchase"]
+    rows = []
+    eid = 0
+    # all orderings of up to 4 events over the 3 types, multiple users
+    evs = ["view", "click", "purchase", "view", "click", "other"]
+    for u, perm in enumerate(itertools.permutations(range(6), 4)):
+        for k, i in enumerate(perm):
+            rows.append((u, evs[i], k * 10))
+            eid += 1
+    # a user with simultaneous view+click (strictly-after must reject)
+    u0 = 10_000
+    rows += [(u0, "view", 0), (u0, "click", 0), (u0, "purchase", 5)]
+    df = spark.createDataFrame(rows, schema="user_id long, event_type string, ts long")
+    got = {
+        r["step_name"]: r["n_users"]
+        for r in funnel(df, steps).collect()
+    }
+    # naive python reference
+    from collections import defaultdict
+
+    hist = defaultdict(list)
+    for u, t, ts in rows:
+        hist[u].append((ts, t))
+    exp = {s: 0 for s in steps}
+    for u, h in hist.items():
+        prev = None
+        for s in steps:
+            cand = [ts for ts, t in h if t == s and (prev is None or ts > prev)]
+            if not cand:
+                break
+            prev = min(cand)
+            exp[s] += 1
+    assert got == exp

@@ -3,6 +3,8 @@ expression-based exact baseline (modulo float-tie rank swaps)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -592,3 +594,121 @@ class TestTruncatedRerank:
             ).orderBy("rank").collect()
         ]
         assert got == [1, 2]  # 3 pruned at the coarse stage
+
+
+def test_pq_encode_matches_expression_form(spark, sf_dir):
+    """The numpy encode must be code-for-code identical to the
+    expression form (per-subspace interpreted fold + first-min
+    argmin), and stay a map-only ArrowEvalPython projection."""
+    from sdg_big_data_spark.functions.text import let
+    from sdg_big_data_spark.operators import similarity
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    cbs = similarity.collect_pq_codebooks(
+        similarity.train_pq_codebooks(emb, m=4, dim=64)
+    )
+    sub = len(cbs[0][0][1])
+
+    def expression_codes(df):  # the expression form, kept as the reference
+        def argmin_code(d_arr, cells_arr):
+            return let(
+                d_arr,
+                lambda a: F.element_at(
+                    cells_arr, F.array_position(a, F.array_min(a)).cast("int")
+                ),
+            )
+
+        codes = []
+        for j, cb in enumerate(cbs):
+            d_arr = similarity._sub_dist_arr(
+                F.col("embedding"), j, sub, [cent for _, cent in cb]
+            )
+            codes.append(argmin_code(d_arr, F.lit([int(c) for c, _ in cb])))
+        return df.withColumn("pq_ref", F.array(*codes))
+
+    got = similarity.pq_encode(emb, cbs).select("vec_id", "pq_code")
+    ref = expression_codes(emb).select("vec_id", "pq_ref")
+    j = got.join(ref, "vec_id")
+    bad = j.where(~F.col("pq_code").eqNullSafe(F.col("pq_ref"))).count()
+    assert bad == 0, "numpy pq_encode diverged from the expression fold"
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan
+    for node in ("Exchange", "Join", "BatchEvalPython"):
+        assert node not in plan, f"pq_encode is no longer map-only: {node}"
+
+
+def test_arrow_pair_scores_match_expression_forms(spark, sf_dir):
+    """``dot_arrow``/``cosine_arrow`` must be BITWISE equal to the
+    interpreted zip_with/aggregate folds they replaced (per-dimension
+    index-order accumulation; eqNullSafe catches NaN and null parity)."""
+    from sdg_big_data_spark.operators import similarity as S
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    q = emb.where(F.col("vec_id") < 7).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    pairs = emb.select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("cv")
+    ).join(F.broadcast(q), F.col("qid") != F.col("nid"))
+    both = pairs.select(
+        "qid",
+        "nid",
+        S.cosine(F.col("qv"), F.col("cv")).alias("c_ref"),
+        S.cosine_arrow(F.col("qv"), F.col("cv")).alias("c_new"),
+        S.dot(F.col("qv"), F.col("cv")).alias("d_ref"),
+        S.dot_arrow(F.col("qv"), F.col("cv")).alias("d_new"),
+    )
+    bad = both.where(
+        ~F.col("c_ref").eqNullSafe(F.col("c_new"))
+        | ~F.col("d_ref").eqNullSafe(F.col("d_new"))
+    ).count()
+    assert bad == 0, "Arrow pair kernels diverged from the expression folds"
+
+
+def test_hyperplane_bucket_matches_expression_form(spark, sf_dir):
+    """The vectorized bucket must reproduce the expression form's bucket
+    for every row: same fold-order projections → same sign bits (and a
+    null vector keeps bucket 0)."""
+    from sdg_big_data_spark.operators import similarity as S
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+
+    def expression_bucket(vec, dim, n_planes):  # the expression form
+        bucket = F.lit(0).cast("long")
+        for p in range(n_planes):
+            comps = F.array(
+                *[
+                    F.lit(
+                        (((p * 1_000_003 + j) * S._HP_MIX_A + S._HP_MIX_B)
+                         % 2_000_001) / 1_000_000.0 - 1.0
+                    )
+                    for j in range(dim)
+                ]
+            )
+            proj = S.dot(vec, comps)
+            bucket = bucket + F.when(proj > 0, F.lit(2**p)).otherwise(F.lit(0))
+        return bucket
+
+    for n_planes in (4, 8):
+        both = emb.select(
+            expression_bucket(F.col("embedding"), 64, n_planes).alias("b_ref"),
+            S.hyperplane_bucket(F.col("embedding"), 64, n_planes).alias("b_new"),
+        )
+        bad = both.where(~F.col("b_ref").eqNullSafe(F.col("b_new"))).count()
+        assert bad == 0, f"bucket diverged at n_planes={n_planes}"
+
+
+def test_lsh_bucket_udf_not_duplicated_by_join_null_filter(spark, sf_dir):
+    """The planner derives an isnotnull() filter for the bucket
+    equi-join key and, for a nullable UDF result, pushes it below the
+    projection — evaluating the bucket UDF twice per side (observed as
+    5 ArrowEvalPython nodes). ``hyperplane_bucket`` returns
+    ``coalesce(udf, 0)``, which is non-nullable, so the derived filter
+    folds away: one evaluation per side + one pair scorer."""
+    from sdg_big_data_spark.operators import similarity as S
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    out = S.lsh_topk(emb, emb.where("vec_id < 5"), dim=64, k=5, n_planes=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    n = plan.count("ArrowEvalPython")
+    assert n <= 3, f"bucket UDF duplicated again: {n} ArrowEvalPython nodes"

@@ -257,3 +257,34 @@ class TestSyntheticEventsSource:
             assert 0 <= r["user_id"] < 10
             assert r["event_type"] in EVENT_TYPES
             assert 0.0 <= r["value"] < 100.0
+
+
+def test_read_table_plan_memo_hits_and_invalidates(spark, tmp_path, sf_dir):
+    """``read_table`` memoizes the RESOLVED PLAN per (session, dir,
+    file-signature) — a lazy plan, never row data: repeated calls return
+    the same object, any file change invalidates, and the superseded
+    entry is dropped so the memo holds one plan per table."""
+    import shutil
+
+    from sdg_big_data_spark.sources.readers import read_table
+
+    src = os.path.join(sf_dir, "nation.parquet")
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    dst = os.path.join(d, "nation.parquet")
+    (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, dst)
+    df1 = read_table(spark, d, "nation")
+    df2 = read_table(spark, d, "nation")
+    assert df1 is df2, "repeat read_table should return the memoized plan"
+    n = df1.count()
+    # mutate the file -> signature changes -> fresh resolve
+    os.utime(dst if os.path.isfile(dst) else os.path.join(
+        dst, os.listdir(dst)[0]
+    ))
+    df3 = read_table(spark, d, "nation")
+    assert df3 is not df1, "file change must invalidate the plan memo"
+    assert df3.count() == n
+    entries = [
+        k for k in readers._PLAN_MEMO if k[2:4] == (os.path.abspath(d), "nation")
+    ]
+    assert len(entries) == 1, "a rewritten table must leave one memo entry"

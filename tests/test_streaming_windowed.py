@@ -65,3 +65,42 @@ def test_streaming_available_now_tumbling(spark, events_batch, tmp_path):
     b = {tuple(r) for r in batch.collect()}
     assert g <= b
     assert len(g) >= 1  # the old window is past the watermark and emitted
+
+
+def test_session_window_oracle_breaks_on_gap_over_one_hour(spark, tmp_path):
+    """``s_session_window`` against its DuckDB oracle on gaps of 3599,
+    3600 and 3601 s. ``session_window`` merges sessions whose [start,
+    end) windows touch, so a gap of exactly 1 h stays in the session,
+    as in g_sessionize's ``gap > max_gap``; only the 3601 s gap starts
+    a new one."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sdg_big_data_spark.plans import catalog
+
+    t0 = dt.datetime(2024, 1, 1)
+    secs = [0, 3599, 7199, 10800, 0]  # user 1 gaps: 3599, 3600, 3601
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(5), pa.int64()),
+            "ts": pa.array([t0 + dt.timedelta(seconds=s) for s in secs],
+                           pa.timestamp("us")),
+            "user_id": pa.array([1, 1, 1, 1, 2], pa.int64()),
+            "event_type": ["click"] * 5,
+            "value": [1.0, 2.0, 3.0, 4.0, 5.0],
+            "props": [""] * 5,
+        }),
+        path,
+    )
+    catalog._load_all()
+    spec = catalog.REGISTRY["s_session_window"]
+    cols = "user_id, sess_start, sess_end, n_events, total_value"
+    out = spec.fn(spark, str(tmp_path)).selectExpr(*cols.split(", "))
+    got = sorted(tuple(r) for r in out.collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = sorted(con.execute(f"SELECT {cols} FROM ({spec.sql})").fetchall())
+    assert got == want
+    assert [(u, n) for u, _, _, n, _ in got] == [(1, 3), (1, 1), (2, 1)]

@@ -7,8 +7,9 @@ Steps, in order:
 
 1. ``DRIVER_LEDGER.md``   — tools/driver_ledger.py over all
    CORRECTNESS_r*.json (cumulative driver-correctness state).
-2. ``HOF_AUDIT.json``     — tools/hof_audit.py plan-diff audit
-   (interpreted-lambda duplication suspects must stay empty).
+2. ``PLAN_SHAPES.json``   — tools/plan_shapes.py per-query plan shapes
+   (interpreted-lambda duplication suspects and plan errors must stay
+   empty).
 3. ``BENCH_ANCHOR_SF01.json`` — a fresh full-catalog bench.py run at
    sf0.1 copied over the anchor record, so round-over-round per-query
    comparisons always have a same-catalog baseline.
@@ -44,7 +45,7 @@ def main() -> int:
     skip_bench = "--skip-bench" in sys.argv
     rc = 0
     rc |= run([sys.executable, "tools/driver_ledger.py"])
-    rc |= run([sys.executable, "tools/hof_audit.py"])
+    rc |= run([sys.executable, "tools/plan_shapes.py"])
     # re-stamp QUERY_HASHES.json for the queries the latest round
     # sampled, so the changed-since-sampled ordering tier rotates
     rc |= run([sys.executable, "tools/query_hashes.py"])
@@ -66,11 +67,11 @@ def main() -> int:
             else:
                 print("anchor NOT refreshed (errors or wrong sf)", file=sys.stderr)
                 rc |= 1
-    audit = json.loads((ROOT / "HOF_AUDIT.json").read_text())
-    suspects = audit.get("duplication_suspects", [])
-    if suspects:
-        print(f"HOF duplication suspects: {suspects}", file=sys.stderr)
-        rc |= 1
+    shapes = json.loads((ROOT / "PLAN_SHAPES.json").read_text())
+    for key in ("duplication_suspects", "errors"):
+        if shapes.get(key):
+            print(f"PLAN_SHAPES {key}: {shapes[key]}", file=sys.stderr)
+            rc |= 1
     rc |= count_consistency_gate()
     return rc
 
@@ -78,8 +79,8 @@ def main() -> int:
 def count_consistency_gate() -> int:
     """Fail (rc=1) if any derived record's query count differs from the
     live catalog's — a catalog entry added AFTER round close otherwise
-    leaves stale derived records until the next round (r9: HOF_AUDIT
-    said 211 on a 212-query tree for a full round)."""
+    leaves stale derived records until the next round (r9: the HOF
+    audit said 211 on a 212-query tree for a full round)."""
     import re
 
     sys.path.insert(0, str(ROOT))
@@ -88,11 +89,11 @@ def count_consistency_gate() -> int:
     n_cat = len(catalog.queries())
     counts: dict[str, int | None] = {}
     try:
-        counts["HOF_AUDIT.queries_total"] = json.loads(
-            (ROOT / "HOF_AUDIT.json").read_text()
-        ).get("queries_total")
-    except (OSError, ValueError):
-        counts["HOF_AUDIT.queries_total"] = None
+        counts["PLAN_SHAPES.queries"] = len(
+            json.loads((ROOT / "PLAN_SHAPES.json").read_text())["queries"]
+        )
+    except (OSError, ValueError, KeyError):
+        counts["PLAN_SHAPES.queries"] = None
     try:
         counts["BENCH_ANCHOR_SF01.n_queries"] = json.loads(
             (ROOT / "BENCH_ANCHOR_SF01.json").read_text()
